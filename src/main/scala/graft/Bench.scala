@@ -1,15 +1,28 @@
 package graft
+
+import scala.concurrent.duration.Duration
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEntry.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, sfDir, cpus) finally spark.stop()
+  }
+
+  /** Run `body`; a failure escapes naming what failed, never becomes a time. */
+  private def timed(what: String)(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try body catch { case NonFatal(e) => throw new RuntimeException(s"$what failed", e) }
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private def run(spark: SparkSession, sfDir: String, cpus: String): Unit = {
     // labeled warm-up phase: materialize shared memo chains first so each
     // query's number is steady-state, not chain-build attribution noise.
     // The chains (taxi / docs / events) are independent jobs sharing one
@@ -17,32 +30,16 @@ object Bench {
     // machine (round 9): concurrent wall 20.6/22.8 s vs sequential
     // 52.8/67.9 s — each chain alone leaves most of the 32 cores idle
     // (many small stages), so overlap ≈ max(chain) not sum(chain).
-    // Concurrent stays the default; SPARK_GRAFT_WARM_MODE=seq selects the
-    // serial order (useful to attribute per-chain cost without overlap).
     val warmT0 = System.nanoTime()
     val warmEntries = SparkEntry.warmups.toSeq.sortBy(_._1)
-    def timed(name: String, fn: (SparkSession, String) => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir) } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val warm: Map[String, Double] =
-      if (!sys.env.get("SPARK_GRAFT_WARM_MODE").contains("seq")) {
-        val warmPool = java.util.concurrent.Executors.newFixedThreadPool(
-          warmEntries.size.max(1))
-        implicit val warmEc: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(warmPool)
-        val fut = warmEntries.map { case (n, f) =>
-          scala.concurrent.Future(timed(n, f))
-        }
-        val res = scala.collection.immutable.ListMap(
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(fut),
-            scala.concurrent.duration.Duration.Inf): _*)
-        warmPool.shutdown()
-        res
-      } else scala.collection.immutable.ListMap(
-        warmEntries.map { case (n, f) => timed(n, f) }: _*)
+    val warmPool = java.util.concurrent.Executors.newFixedThreadPool(warmEntries.size.max(1))
+    val warm = try {
+      implicit val warmEc: ExecutionContext = ExecutionContext.fromExecutor(warmPool)
+      val fut = warmEntries.map { case (n, f) =>
+        Future(n -> timed(s"warm-up $n")(f(spark, sfDir)))
+      }
+      scala.collection.immutable.ListMap(Await.result(Future.sequence(fut), Duration.Inf): _*)
+    } finally warmPool.shutdown()
     val warmWall = (System.nanoTime() - warmT0) / 1e9
     // p50-of-N per query (default 3): one-off machine-load spikes and the
     // first-run plan-compile cost are not the steady-state number a round
@@ -54,11 +51,7 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
     val results = scala.collection.immutable.ListMap(selected: _*).map { case (name, fn) =>
-      val times = Seq.fill(reps) {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val times = Seq.fill(reps)(timed(s"query $name")(fn(spark, sfDir).count(): Unit)).sorted
       name -> times(times.length / 2)
     }
     def json(m: Map[String, Double]) = m.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -66,61 +59,7 @@ object Bench {
     // total = warm-up WALL-CLOCK (chains run concurrently — summing their
     // overlapping per-chain times would double-count) + per-query medians
     val total = warmWall + results.values.sum
-    // Host-noise self-calibration (SCALING.md §S4, VERDICT r15 #7): the
-    // round-15 A/B intervention proved cross-round absolute times can be
-    // elevated ~1.4x by the HOST window with zero tree change. Every
-    // capture now carries its own control: the same fixed 5-query probe
-    // that diagnosed r15, as measured IN THIS RUN, over its clean-window
-    // anchor (BENCH_STEADY_r15.json, the 107.1 s capture). A cross-round
-    // total comparison divides by elevation_ratio first; a ratio ≈ 1.0
-    // certifies a clean window, ≈ 1.4 reproduces the r15 elevation.
-    // null when a SPARK_GRAFT_BENCH_FILTER excluded a probe query (the
-    // probe is then not comparable) or on a non-default SF dir.
-    // Probe set RE-BASED round 20 (VERDICT r19 #1): every query of the
-    // old probe set (merge_upsert_key, graph_pagerank, join_star_view,
-    // join_fact_dims, agg_sum_reconcile) was optimized in round 19, so
-    // the committed denominators stopped describing the tree and the
-    // ratio went meaningless (0.35/0.71 readings on the r19 driver runs).
-    // The new probe is five fixed-cost queries untouched by rounds 19-20
-    // whose shapes the optimizer has no reason to revisit (simple
-    // scan+project+hash/sort shapes and a memo-scan topN). The anchor is
-    // calibrated on FULL captures: in a filtered run the probes execute
-    // in a shallow-warm JVM and read ~2x (measured), so compare elevation
-    // only between full-surface runs (filtered runs already print null
-    // whenever the filter drops a probe query; a filtered run that keeps
-    // all five still isn't comparable — read its ratio with that caveat).
-    val probeSet = Seq("sort_topn", "split_hash", "text_token_count",
-      "f_sha256_hex", "f_hash64_id")
-    // Anchor policy (VERDICT r18 #3 — the host-luck dependency retired):
-    // local[8] is the CANONICAL steady configuration. Two rounds of
-    // interleaved same-tree captures showed local[32] amplifies host
-    // noise ~1.8x (32 executor threads oversubscribe a 32-vCPU guest
-    // whose host window carries invisible load: r17/r18 local[32] probes
-    // read elevation 2.0-2.3 while local[8] read 1.04-1.37 in the same
-    // hours), so waiting for a quiet local[32] window is waiting on host
-    // luck. The canonical anchor is the committed 232-query local[8]
-    // capture BENCH_STEADY_r18_local8.json (elevation 1.04 vs the old
-    // r15 anchor — a certified-clean window); local[32] runs remain
-    // INFORMATIONAL and keep the r15 5-query sum as their denominator.
-    // The r15 anchor's cross-SURFACE comparison (177 queries then vs 232
-    // now) is retired with it: steady totals compare local[8]-to-
-    // local[8] on the full declared surface from r18 forward.
-    // Anchors measured on the round-20 post-optimization tree (committed
-    // captures BENCH_STEADY_r20_opt.json / BENCH_STEADY_r20_opt_c32.json);
-    // the retired r18/r15 anchors (4.087736218 / 3.92549897) described the
-    // OLD probe set on old trees and stay valid only for those captures.
-    val probeAnchorSf01 =
-      if (cpus == "8") 0.79888566 // 5-query sum, BENCH_STEADY_r20_opt
-      else 0.794853001 // local[32] sum, BENCH_STEADY_r20_opt_c32 (informational)
-    val anchorName =
-      if (cpus == "8") "BENCH_STEADY_r20_opt (canonical)"
-      else "BENCH_STEADY_r20_opt_c32 (informational local[32])"
-    val probeVals = probeSet.flatMap(results.get)
-    val elevation =
-      if (probeVals.length == probeSet.length && sfDir.endsWith("sf0.1"))
-        (probeVals.sum / probeAnchorSf01).toString
-      else "null"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"warmup":${json(warm)},"warmup_wall":$warmWall,"reps":$reps,"cpus":$cpus,"elevation_ratio":$elevation,"probe_anchor":"$anchorName 5-query sum $probeAnchorSf01 s","sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"warmup":${json(warm)},"warmup_wall":$warmWall,"reps":$reps,"cpus":$cpus,"sf":"$sfDir"}"""
     println(line)
     // The stdout line alone is fragile — a capture that truncates the
     // tail loses per-query numbers (round-5's BENCH artifact kept only
@@ -128,7 +67,6 @@ object Bench {
     // session) can read it whole.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
-    catch { case _: Throwable => () } // bench numbers still went to stdout
-    spark.stop()
+    catch { case NonFatal(_) => () } // bench numbers still went to stdout
   }
 }

@@ -45,10 +45,7 @@ object LambdaProcSoak {
   private val TtlMs = 3000L
 
   private def session(threads: Int): SparkSession = {
-    val s = SparkEntry.configure(SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val s = SparkEntry.localSession(threads.toString)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

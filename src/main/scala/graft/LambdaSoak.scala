@@ -86,11 +86,7 @@ object LambdaSoak {
     val batchN = 50
     val streamN = 100
     val month = 202401
-    val spark = SparkEntry.configure(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_SOAK_STORE="<scheme>:<FileSystem class>" runs the WHOLE
     // soak through that filesystem — e.g. the simulated hostile object

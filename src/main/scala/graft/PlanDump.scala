@@ -1,38 +1,53 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev-only: write `.explain("formatted")` for declared queries into a
-  * directory, one file per query (optimization-round plan evidence).
-  * Usage: runMain graft.PlanDump <outDir> <suffix> [name ...]
-  * With no names, dumps every declared query. */
+import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Plan evidence for declared queries. Per query it writes
+  * `<name>.plan.txt` (the formatted plan, before execution) and
+  * `<name>.exec.txt` (the executed plan: the final AQE plan, including the
+  * ReusedExchange / AQEShuffleRead nodes the initial plan cannot show).
+  * Usage: runMain graft.PlanDump <outDir> [name ...]
+  * With no names, dumps every declared query. Exits 1 if any query fails. */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val suffix = args(1)
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkEntry.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val names =
-      if (args.length > 2) args.drop(2).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
+
+  /** Dump `names` into `outDir`; returns the names that failed. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          names: Seq[String]): Seq[String] = {
+    Files.createDirectories(Paths.get(outDir))
+    names.filterNot { n =>
       try {
-        val df = SparkEntry.queries(n)(spark, dir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"), plan)
+        val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        Files.writeString(Paths.get(outDir, s"$n.plan.txt"), qe.explainString(FormattedMode))
+        // Execute THIS DataFrame's own QueryExecution (a `.write` or
+        // `.count()` builds a different one whose AQE plan we'd never
+        // see) so the dump shows the final adaptive plan.
+        qe.toRdd.count(): Unit
+        Files.writeString(Paths.get(outDir, s"$n.exec.txt"), qe.executedPlan.toString)
+        true
       } catch {
-        case e: Throwable =>
-          System.err.println(s"PLAN FAIL $n: ${e.getMessage}")
+        case NonFatal(e) =>
+          System.err.println(s"PLANDUMP FAIL $n: ${e.getMessage}")
+          false
       }
     }
-    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: graft.PlanDump <outDir> [name ...]")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    spark.sparkContext.setLogLevel("ERROR")
+    val names =
+      if (args.length > 1) args.toSeq.tail else SparkEntry.queries.keys.toSeq.sorted
+    val failed = try run(spark, dir, args(0), names) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"PLANDUMP ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

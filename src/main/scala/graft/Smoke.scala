@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local mirror of the driver's t1 smoke: run SparkEntry.entry, assert rows>0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkEntry.configure(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SparkEntry.localSession("8")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.batch.Maintenance
 import graft.model.EventsModel
@@ -56,11 +56,7 @@ object SoakProbe {
     // ~1k rows/segment (measured ~9 s/batch at 32 cores vs the data
     // volume of a sub-second job); 8 cores keeps the 3-sink commit cheap.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkEntry.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = java.nio.file.Files.createTempDirectory("graft_soak").toString

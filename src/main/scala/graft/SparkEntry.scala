@@ -43,6 +43,14 @@ object SparkEntry {
     // dominates micro-batch latency for small stateful batches).
     .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
 
+  /** The harness session: local[cpus], one shuffle partition per core, UI
+    * off, [[configure]]d. Callers set their own log level. */
+  def localSession(cpus: String): SparkSession = configure(SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.ui.enabled", "false"))
+    .getOrCreate()
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's headline KPI (README_modeling.md §7): trips / total
     * fare / tip%, by day, over the cleaned+deduped star. */

@@ -1300,7 +1300,10 @@ object DocPipeline {
     * (doc_id, term, tf): document lengths are the index's per-doc tf sums
     * (explode yields exactly size(t) rows per doc, so sum(tf) = size(t))
     * and the query-term tf rows are an index lookup - no corpus-scale
-    * tokenize per call. */
+    * tokenize per call. A term repeated in a query is one (query_id, w)
+    * row whose tf is scaled by its multiplicity m: [[bm25Search]]'s join
+    * emits each token occurrence m times into one tf group, so its tf is
+    * m·tf too, saturated once per term. */
   def bm25SearchFromIndex(tfIdx: DataFrame, queries: Seq[(Int, Seq[String])],
                           topK: Int = 10, k1: Double = 1.2,
                           b: Double = 0.75): DataFrame = {
@@ -1308,10 +1311,11 @@ object DocPipeline {
     import spark.implicits._
     val dl = tfIdx.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val qterms = queries.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
-      .toDF("query_id", "w")
+      .groupBy(identity).toSeq.map { case ((qid, t), occ) => (qid, t, occ.size.toLong) }
+      .toDF("query_id", "w", "m")
     val tf = tfIdx.select(col("doc_id"), col("term").as("w"), col("tf"))
       .join(broadcast(qterms), "w")
-      .select(col("query_id"), col("doc_id"), col("w"), col("tf"))
+      .select(col("query_id"), col("doc_id"), col("w"), (col("tf") * col("m")).as("tf"))
     bm25Score(dl, tf, topK, k1, b)
   }
 

@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.EventsModel
 import graft.stream.Ingest
 
-/** Dev-only ingest-throughput harness (test scope, like BenchOne for
-  * batch): lands the given fixture's event envelopes as a JSONL landing
-  * dir, then times the full streaming ingest — readStream → parse/enrich/
-  * route → 3-sink stage-publish-marker commit — to completion under
+/** Dev-only ingest-throughput harness (test scope; batch queries are
+  * timed by `graft.Bench` with SPARK_GRAFT_BENCH_FILTER): lands the given
+  * fixture's event envelopes as a JSONL landing dir, then times the full
+  * streaming ingest — readStream → parse/enrich/route → 3-sink
+  * stage-publish-marker commit — to completion under
   * `Trigger.AvailableNow()`. Prints one JSON line with rows, wall seconds
   * and rows/sec so SCALING.md can record a measured ingest exponent
   * (run at x1 and a scale_gen x20 replica; VERDICT r11 item 7).
@@ -23,9 +23,7 @@ import graft.stream.Ingest
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkEntry.configure(SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = SparkEntry.localSession("32")
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = java.nio.file.Files.createTempDirectory("graft_ingest_bench").toString

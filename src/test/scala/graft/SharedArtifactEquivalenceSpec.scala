@@ -87,10 +87,15 @@ class SharedArtifactEquivalenceSpec extends SparkSpec {
   }
 
   test("bm25SearchFromIndex(termFrequencies) == bm25Search (dl = sum tf)") {
-    val qs = Seq((1, Seq("quick", "river")), (2, Seq("spark", "twelvx")))
+    val plain = Seq((1, Seq("quick", "river")), (2, Seq("spark", "twelvx")))
+    // a repeated term (within one entry or across entries of one query_id)
+    // raises tf before saturation in bm25Search; the index path must match
+    val repeated = Seq((1, Seq("quick", "quick", "river")), (2, Seq("one", "one", "one")),
+      (3, Seq("spark")), (3, Seq("spark", "twelvx")))
     val idx = DocPipeline.termFrequencies(corpus).localCheckpoint(true)
-    assert(rows(DocPipeline.bm25SearchFromIndex(idx, qs))
-      == rows(DocPipeline.bm25Search(corpus, qs)))
+    for (qs <- Seq(plain, repeated))
+      assert(rows(DocPipeline.bm25SearchFromIndex(idx, qs))
+        == rows(DocPipeline.bm25Search(corpus, qs)), qs)
     // the dl identity the rewrite rests on: sum(tf) per doc == size(tokens)
     val dlIdx = idx.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val dlDirect = DocPipeline.tokenized(corpus)

@@ -18,11 +18,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = graft.SparkEntry.configure(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val s = graft.SparkEntry.localSession("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
